@@ -5,6 +5,14 @@ minhash signatures, normalized vectors) that feeds 2-4 plan branches.
 Without pinning, Catalyst re-derives the subtree per branch and the
 expensive pass runs once per consumer.
 
+A range sort (``orderBy``) is a second consumer even in a single-branch
+plan: its RangePartitioner samples the input in a job of its own before
+the shuffle-map stage computes that input again. Below a Python map
+(``mapInPandas``, ``applyInPandas``) with no shuffle in between, that
+runs the Python body twice per row, so the ``mm_*`` and
+``pandas_source_stats`` builders pin the map's output before sorting
+(``plans.audit.python_maps_under_range_sort`` lists unpinned cases).
+
 Two pinning strategies exist, with different failure semantics:
 
 - ``persist(MEMORY_AND_DISK)`` — keeps lineage. On a real cluster a
@@ -97,15 +105,19 @@ def force_concurrently(frames: list[DataFrame], max_workers: int = 4) -> None:
     frame: building the InMemoryRelation computes every column of the
     cached plan regardless of the downstream projection, so unlike on
     an unpersisted plan it cannot under-compute — which is also why
-    every frame MUST already be persisted (asserted below, ADVICE r13):
-    on an unpersisted frame the count would column-prune, build no
-    cache, and silently lose the sharing this helper exists for.
+    every frame MUST already be persisted (a ValueError otherwise,
+    ADVICE r13): on an unpersisted frame the count would column-prune,
+    build no cache, and silently lose the sharing this helper exists
+    for.
 
     Threads are wrapped in ``inheritable_thread_target`` (ADVICE r13):
     under PySpark pinned-thread mode a plain pool thread does not
     inherit the caller's JVM thread-locals, so job groups / job
     descriptions set on the main thread would not tag (or cancel) the
-    pool's jobs.
+    pool's jobs. With pinned-thread mode off there are no such
+    thread-locals to carry; ``inheritable_thread_target(session)`` then
+    returns the session itself rather than a decorator, and the plain
+    callable is used.
     """
     from concurrent.futures import ThreadPoolExecutor
 
@@ -115,15 +127,20 @@ def force_concurrently(frames: list[DataFrame], max_workers: int = 4) -> None:
     if not frames:
         return
     for df in frames:
-        assert df.storageLevel != _SL.NONE, (
-            "force_concurrently: frame is not persisted — pin it with"
-            " materialize() first or the count builds no cache"
-        )
+        if df.storageLevel == _SL.NONE:
+            raise ValueError(
+                "force_concurrently: frame is not persisted — pin it with"
+                " materialize() first or the count builds no cache"
+            )
     if len(frames) == 1:
         frames[0].count()
         return
-    session = frames[0].sparkSession
-    run = inheritable_thread_target(session)(lambda df: df.count())
+
+    def count(df: DataFrame) -> int:
+        return df.count()
+
+    wrap = inheritable_thread_target(frames[0].sparkSession)
+    run = wrap(count) if callable(wrap) else count
     with ThreadPoolExecutor(max_workers=min(max_workers, len(frames))) as pool:
         list(pool.map(run, frames))
 

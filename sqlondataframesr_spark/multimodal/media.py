@@ -29,6 +29,11 @@ no shuffle; payload bytes never cross the network except at scan.
 Metadata-only queries prune the payload column at the parquet reader
 (columnar layout means the binary column is never even read), which is
 the whole point of carrying media as a column instead of files.
+
+The ``mm_*`` query builders pin the map's output with ``materialize``
+before their ``orderBy``, whose range sort would otherwise run the
+Python body twice per row (see ``materialize``). The library
+featurizers (``decode_image`` and friends) stay lazy and pin nothing.
 """
 
 from __future__ import annotations
@@ -39,6 +44,7 @@ from typing import TYPE_CHECKING
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..catalog import load_table
+from ..materialize import materialize, spread_scan
 
 if TYPE_CHECKING:  # pragma: no cover
     import pandas as pd
@@ -47,23 +53,6 @@ HIST_BUCKETS = 16
 
 #: media_type by doc_id residue — stand-in for a real modality column.
 _MEDIA_TYPE = "CASE doc_id % 3 WHEN 0 THEN 'image' WHEN 1 THEN 'audio' ELSE 'video' END"
-
-
-def _spread(media: DataFrame) -> DataFrame:
-    """Ensure the CPU-heavy Arrow decode stage has enough partitions.
-
-    The testdata ships one parquet file per table, so the scan yields
-    1-2 splits and a ``mapInPandas`` decode inherits them — the whole
-    decode runs on one core (measured: the mm_sample_frames stage was
-    single-threaded, 27k frames x 75 KB hashed serially). Repartition
-    on doc_id up to the session's parallelism ONLY when the input is
-    under-partitioned: at real scale the scan already carries
-    thousands of splits and this is a no-op (no shuffle inserted).
-    """
-    target = media.sparkSession.sparkContext.defaultParallelism
-    if media.rdd.getNumPartitions() < max(2, target // 2):
-        return media.repartition(target, "doc_id")
-    return media
 
 
 def media_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -111,7 +100,7 @@ def byte_histogram(media: DataFrame, buckets: int = HIST_BUCKETS) -> DataFrame:
                 hists.append((h / total if total else h).round(6).tolist())
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "hist": hists})
 
-    return _spread(media.select("doc_id", "payload")).mapInPandas(
+    return spread_scan(media.select("doc_id", "payload"), "doc_id").mapInPandas(
         featurize, out_schema
     )
 
@@ -147,7 +136,7 @@ def byte_histogram_arrow(media: DataFrame, buckets: int = HIST_BUCKETS) -> DataF
                 names=["doc_id", "hist"],
             )
 
-    return _spread(media.select("doc_id", "payload")).mapInArrow(
+    return spread_scan(media.select("doc_id", "payload"), "doc_id").mapInArrow(
         featurize, out_schema
     )
 
@@ -159,6 +148,7 @@ def mm_byte_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     array-per-doc feature shape for library use."""
     return (
         byte_histogram(media_frame(spark, sf_dir))
+        .transform(materialize)
         .select("doc_id", F.posexplode("hist").alias("bucket", "share"))
         .orderBy("doc_id", "bucket")
     )
@@ -244,42 +234,54 @@ def decode_image(media: DataFrame) -> DataFrame:
 
         magic, header = b"SIMG", 8
 
-        def pixels(payload, width, height):
+        def features(payload, width, height):
+            """(width, height, mean, std, nonzero share) of the decoded
+            pixels. A tiled payload is q whole copies of its bytes plus
+            a prefix of r bytes, so its pixel sums come from one pass
+            over the payload, integer-exact: O(len(payload)), not
+            O(width * height)."""
             if payload[:4] == magic:
                 w = int.from_bytes(payload[4:6], "big")
                 h = int.from_bytes(payload[6:8], "big")
-                return np.frombuffer(
+                px = np.frombuffer(
                     payload, np.uint8, count=w * h, offset=header
                 ).reshape(h, w)
-            n = int(width) * int(height)
+                return w, h, float(px.mean()), float(px.std()), float((px > 0).mean())
+            w, h = int(width), int(height)
+            n = w * h
             src = np.frombuffer(payload, np.uint8)
             if src.size == 0:
-                return np.zeros((int(height), int(width)), np.uint8)
-            return np.tile(src, -(-n // src.size))[:n].reshape(
-                int(height), int(width)
-            )
+                return w, h, 0.0, 0.0, 0.0
+            q, r = divmod(n, src.size)
+            v = src.astype(np.int64)
+            sq = v * v
+            total = q * int(v.sum()) + int(v[:r].sum())
+            total_sq = q * int(sq.sum()) + int(sq[:r].sum())
+            nonzero = q * int(np.count_nonzero(v)) + int(np.count_nonzero(v[:r]))
+            std = math.sqrt((n * total_sq - total * total) / (n * n))
+            return w, h, total / n, std, nonzero / n
 
         for pdf in batches:
             rows = []
             for doc_id, payload, width, height in zip(
                 pdf["doc_id"], pdf["payload"], pdf["width"], pdf["height"]
             ):
-                px = pixels(bytes(payload), width, height)
+                w, h, mean, std, nonzero = features(bytes(payload), width, height)
                 rows.append(
                     {
                         "doc_id": doc_id,
-                        "width": px.shape[1],
-                        "height": px.shape[0],
-                        "mean_luma": _r6py(float(px.mean())),
-                        "std_luma": _r6py(float(px.std())),
-                        "nonzero_frac": _r6py(float((px > 0).mean())),
+                        "width": w,
+                        "height": h,
+                        "mean_luma": _r6py(mean),
+                        "std_luma": _r6py(std),
+                        "nonzero_frac": _r6py(nonzero),
                     }
                 )
             yield pd.DataFrame(rows)
 
-    return _spread(media.select("doc_id", "payload", "width", "height")).mapInPandas(
-        _decode, out_schema
-    )
+    return spread_scan(
+        media.select("doc_id", "payload", "width", "height"), "doc_id"
+    ).mapInPandas(_decode, out_schema)
 
 
 def sample_frames(media: DataFrame, every_s: float = 1.0) -> DataFrame:
@@ -353,8 +355,8 @@ def sample_frames(media: DataFrame, every_s: float = 1.0) -> DataFrame:
                     )
             yield pd.DataFrame(rows)
 
-    return _spread(
-        media.select("doc_id", "payload", "width", "height", "duration_s")
+    return spread_scan(
+        media.select("doc_id", "payload", "width", "height", "duration_s"), "doc_id"
     ).mapInPandas(_sample, out_schema)
 
 
@@ -362,7 +364,7 @@ def mm_image_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Decode features for the image-typed rows (rows-only driver
     check; tests/test_multimodal.py pins values against local numpy)."""
     media = media_frame(spark, sf_dir).filter(F.col("media_type") == "image")
-    return decode_image(media).orderBy("doc_id")
+    return decode_image(media).transform(materialize).orderBy("doc_id")
 
 
 def mm_sample_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -371,7 +373,11 @@ def mm_sample_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     media = media_frame(spark, sf_dir).filter(
         F.col("media_type") == "video"
     ).withColumn("duration_s", F.expr(_DURATION_S).cast("int"))
-    return sample_frames(media, every_s=1.0).orderBy("doc_id", "frame_idx")
+    return (
+        sample_frames(media, every_s=1.0)
+        .transform(materialize)
+        .orderBy("doc_id", "frame_idx")
+    )
 
 
 #: frame-sampling geometry: synthetic fps and per-doc duration
@@ -500,7 +506,9 @@ def decode_audio(media: DataFrame) -> DataFrame:
                 )
             yield pd.DataFrame(rows)
 
-    return _spread(media.select("doc_id", "payload")).mapInPandas(_decode, out_schema)
+    return spread_scan(media.select("doc_id", "payload"), "doc_id").mapInPandas(
+        _decode, out_schema
+    )
 
 
 def mm_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -508,7 +516,7 @@ def mm_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     check; tests/test_multimodal.py pins values against local numpy).
     Completes the image/audio/video featurizer triple."""
     media = media_frame(spark, sf_dir).filter(F.col("media_type") == "audio")
-    return decode_audio(media).orderBy("doc_id")
+    return decode_audio(media).transform(materialize).orderBy("doc_id")
 
 
 QUERIES = {

@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..catalog import load_table
+from ..materialize import materialize
 
 _OUT_SCHEMA = (
     "source string, n_docs long, median_chars double, "
@@ -63,9 +64,12 @@ def pandas_source_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "source", "n_chars"
     )
+    # pinned so the range sort's sampler job and its shuffle-map stage
+    # read one computed copy instead of each running the closure
     return (
         docs.groupBy("source")
         .applyInPandas(_source_stats, _OUT_SCHEMA)
+        .transform(materialize)
         .orderBy("source")
     )
 

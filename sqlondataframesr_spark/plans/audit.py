@@ -9,6 +9,7 @@ into a small structured summary so scale properties can be *asserted*
     >>> a.pushed_filters       # reached the parquet reader?
     >>> a.join_strategies      # broadcast vs shuffle
     >>> a.has_cartesian        # accidental cross product?
+    >>> python_maps_under_range_sort(df)  # Python bodies a sort re-runs
 
 The summary reads the AQE *final* plan when available — what actually
 ran, not the static estimate.
@@ -97,3 +98,59 @@ def audit(df: DataFrame) -> PlanAudit:
         has_fused_topk="TakeOrderedAndProject" in plan,
         has_single_task_sort=bool(_SINGLE_TASK_SORT_RE.search(plan)),
     )
+
+
+#: physical nodes that run a Python body over every input row
+PYTHON_MAP_NODES = frozenset(
+    {
+        "MapInPandas",
+        "MapInArrow",
+        "FlatMapGroupsInPandas",
+        "ArrowEvalPython",
+        "BatchEvalPython",
+    }
+)
+
+
+def _plan_children(node) -> list:
+    """Children of a physical node, looking through the adaptive
+    wrapper and query stages, which hide their plans from children()."""
+    cls = node.getClass().getSimpleName()
+    if cls == "AdaptiveSparkPlanExec":
+        return [node.executedPlan()]
+    if cls.endswith("QueryStageExec"):
+        return [node.plan()]
+    kids = node.children()
+    return [kids.apply(i) for i in range(kids.size())]
+
+
+def python_maps_under_range_sort(df: DataFrame) -> list[str]:
+    """Python map nodes that a range sort would evaluate twice.
+
+    A range-partitioning exchange (``orderBy``) samples its input in a
+    job of its own before the shuffle-map stage computes that input
+    again, so a Python map below it runs its body twice per row. A
+    cached scan (``materialize``) or any other exchange in between
+    computes the rows once and breaks the chain; a cached plan is
+    checked on its own. Returns the node names found, in plan order —
+    empty is the healthy answer.
+    """
+    found: list[str] = []
+
+    def walk(node, under_range: bool) -> None:
+        cls = node.getClass().getSimpleName()
+        if cls == "InMemoryTableScanExec":
+            walk(node.relation().cachedPlan(), False)
+            return
+        if under_range and node.nodeName() in PYTHON_MAP_NODES:
+            found.append(node.nodeName())
+        if cls == "ShuffleExchangeExec":
+            partitioning = node.outputPartitioning().getClass().getSimpleName()
+            under_range = partitioning == "RangePartitioning"
+        elif cls in ("BroadcastExchangeExec", "ReusedExchangeExec"):
+            under_range = False
+        for child in _plan_children(node):
+            walk(child, under_range)
+
+    walk(df._jdf.queryExecution().executedPlan(), False)
+    return found

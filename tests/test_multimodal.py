@@ -102,6 +102,49 @@ def test_decode_image_matches_local_numpy(spark, sf_dir):
     assert (row["width"], row["height"]) == (4, 3)
     assert row["mean_luma"] == pytest.approx(round(float(img.mean()), 6))
 
+    # the tiling path sums q whole copies of the payload plus an r-byte
+    # prefix (n = w*h = q*len + r); every split of n must equal the
+    # materialized-pixel replay the oracle uses, value for value
+    from sqlondataframesr_spark.multimodal.expected import _pixels, _r6py
+
+    ramp = bytes((i * 37 + 11) % 256 for i in range(7)) + b"\x00\xff"  # 9 bytes
+    cases = {
+        1: (ramp, 5, 4),  # 20 = 2*9 + 2: shorter than w*h, r > 0
+        2: (ramp, 9, 3),  # 27 = 3*9: exact multiple, r = 0
+        3: (ramp * 5, 4, 2),  # 8 < 45 bytes: longer than w*h, q = 0
+        4: (b"", 6, 5),  # empty: all-zero pixels
+        5: (M.encode_gray(img), 999, 999),  # SIMG: embedded dims win
+    }
+    df = spark.createDataFrame(
+        [(k, bytearray(p), w, h) for k, (p, w, h) in cases.items()],
+        "doc_id long, payload binary, width int, height int",
+    )
+    got = {r["doc_id"]: r for r in M.decode_image(df).collect()}
+    assert set(got) == set(cases)
+    for doc_id, (payload, w, h) in cases.items():
+        px = _pixels(payload, w, h)
+        r = got[doc_id]
+        assert (r["height"], r["width"]) == px.shape, doc_id
+        assert r["mean_luma"] == _r6py(float(px.mean())), doc_id
+        assert r["std_luma"] == _r6py(float(px.std())), doc_id
+        assert r["nonzero_frac"] == _r6py(float((px > 0).mean())), doc_id
+
+
+def test_image_decode_pin_is_released(spark, sf_dir):
+    """mm_image_decode pins its Python map's output for the range
+    sort; release_all() must drop that pin, leaving no persisted RDD
+    behind (other tests' RDDs, if any, are left out of the count)."""
+    from sqlondataframesr_spark.materialize import release_all
+
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    before = persisted()
+    M.mm_image_decode(spark, sf_dir).toPandas()
+    assert persisted() - before, "the decode output was not pinned"
+    release_all()
+    assert not persisted() - before
+
 
 def test_sample_frames_matches_plan_and_local_hashes(spark, sf_dir):
     """Frame count per video == its duration (the mm_frame_plan

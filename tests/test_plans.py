@@ -12,7 +12,10 @@ from __future__ import annotations
 import pytest
 
 from sqlondataframesr_spark import registry
-from sqlondataframesr_spark.plans.audit import audit
+from sqlondataframesr_spark.llm import curation
+from sqlondataframesr_spark.multimodal import media
+from sqlondataframesr_spark.operators import grouped
+from sqlondataframesr_spark.plans.audit import audit, python_maps_under_range_sort
 
 REF = [
     "q1_yearly_top_order",
@@ -775,3 +778,28 @@ def test_markov_iterations_run_on_the_distilled_matrix(spark, sf_dir):
     # occurrence count of the user window is not meaningful — the
     # InMemoryTableScan count is the reuse evidence)
     assert a.text.count("InMemoryTableScan") >= 3
+
+
+@pytest.mark.parametrize(
+    "name", sorted({*media.QUERIES, *grouped.QUERIES, *curation.QUERIES})
+)
+def test_no_python_map_reruns_under_a_range_sort(spark, sf_dir, name):
+    """A range sort samples its input in a job of its own, so a Python
+    map below it with no cache or other exchange in between runs its
+    body twice per row. Every such map must be pinned before the sort."""
+    df = registry.queries()[name](spark, sf_dir)
+    assert python_maps_under_range_sort(df) == []
+
+
+def test_range_sort_guard_flags_unpinned_map_and_clears_pinned(spark):
+    """The guard sees the unpinned map, and a pin or a hash exchange
+    between the map and the sort clears it."""
+    from sqlondataframesr_spark.materialize import materialize
+
+    def same(batches):
+        yield from batches
+
+    mapped = spark.range(10).mapInPandas(same, "id long")
+    assert python_maps_under_range_sort(mapped.orderBy("id")) == ["MapInPandas"]
+    assert python_maps_under_range_sort(mapped.transform(materialize).orderBy("id")) == []
+    assert python_maps_under_range_sort(mapped.groupBy("id").count().orderBy("id")) == []
